@@ -209,8 +209,7 @@ object SparkEntry {
     "q47_rule_registry" -> ((s, _) => {
       val shredded = ShredOps.shredMaterialUsage(
         verifyRecords(s))
-      val reg = new graft.pipeline.RuleRegistry(
-        java.nio.file.Files.createTempDirectory("graft-rules").toString + "/rules.tsv")
+      val reg = new graft.pipeline.RuleRegistry(scratchDir("rules_q47", "synth") + "/rules.tsv")
       reg.register("quantities_within_range",
         "actual_quantity BETWEEN allowed_range_min AND allowed_range_max",
         RuleRecipients("quantities_within_range").split(',').toSeq)
@@ -350,7 +349,7 @@ object SparkEntry {
     // table is what the oracle compares against the golden expectations —
     // per-turn text equality THROUGH the streaming path
     "q90_stream_extract" -> ((s, _) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-stream-q90").toString
+      val base = scratchDir("stream_q90", "synth")
       SynthDataset.turns(s, VerifyConvs).toDF()
         .write.mode("overwrite").parquet(s"$base/in")
       graft.streaming.StreamingExtract
@@ -427,7 +426,7 @@ object SparkEntry {
     // DuckDB rebuilds the bitmap from the same double-hash arithmetic
     "q103_bloom_decontaminate" -> ((s, d) => TrainingOps.bloomDecontaminate(s, d)),
     // skew report: the conversation-length histogram the salted
-    // repartition acts on — top-k heavy keys with their salt fan-out
+    // repartition acts on — top-k heavy keys with their block-salt fan-out
     "q104_skew_report" -> ((s, _) =>
       graft.pipeline.Pipeline.skewReport(SynthDataset.turns(s, VerifyConvs))),
     // collocation mining: adjacent-bigram lift in exact DECIMAL(38,0)
@@ -437,7 +436,7 @@ object SparkEntry {
     // file-source stream in append mode; a sentinel second drain closes
     // the watermark so the emitted windows equal the batch aggregation
     "q106_stream_windows" -> ((s, d) => {
-      val base = java.nio.file.Files.createTempDirectory("graft-stream-q106").toString
+      val base = scratchDir("stream_q106", d)
       graft.streaming.StreamingExtract.eventWindows(
         s, RelationalOps.table(s, d, "events"), base)
     }),
@@ -3209,17 +3208,16 @@ object SparkEntry {
                 (SELECT count(*) FROM shared) AS n_contaminated_docs,
                 CAST((SELECT coalesce(sum(n), 0) FROM shared) AS BIGINT) AS shared_grams_total""",
     // q104: DuckDB recomputes the conversation histogram and the same
-    // salt-cardinality decision from the golden turn table
+    // block-salt cardinality from the golden turn table
     "q104_skew_report" ->
       s"""WITH c AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
                 CAST(sum(length(text)) AS BIGINT) AS n_chars,
-                CAST(count(DISTINCT turn_idx % ${pipeline.Pipeline.DefaultSaltBuckets}) AS BIGINT) AS n_salt_values
+                CAST(count(DISTINCT floor(turn_idx / ${pipeline.Pipeline.DefaultLongConvThreshold})) AS BIGINT) AS n_salt_buckets
               FROM read_parquet('__SYNTH__/golden_turns.parquet/*.parquet')
               GROUP BY 1)
          SELECT conv_id, n_turns, n_chars,
                 CAST(n_turns >= ${pipeline.Pipeline.DefaultLongConvThreshold} AS INTEGER) AS is_long,
-                CASE WHEN n_turns >= ${pipeline.Pipeline.DefaultLongConvThreshold}
-                     THEN n_salt_values ELSE 1 END AS n_salt_buckets
+                n_salt_buckets
          FROM c ORDER BY n_turns DESC, conv_id ASC LIMIT 50""",
     // q105: DuckDB mines the same bigrams (list_zip against the tail
     // slice) and reruns the exact HUGEINT lift arithmetic

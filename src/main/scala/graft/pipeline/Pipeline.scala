@@ -3,25 +3,26 @@ package graft.pipeline
 import graft.extract.Extract
 import graft.model.{ExtractedTurn, LineageRow, Turn}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.CollectionAccumulator
 
 /** The extraction pipeline (SURVEY.md §7.1):
   *
-  * turns → salted repartition (skew-aware) → sortWithinPartitions
+  * turns → salted repartition on (conv_id, salt) → sortWithinPartitions
   * (conv_id, turn_idx) → ONE fused `mapPartitions(Extract.turn)` stage →
   * Dataset[ExtractedTurn].
   *
-  * Salting: long conversations (the Zipf tail) are split across partitions
-  * with `salt = pmod(turn_idx, S)`; short conversations keep salt 0 so they
-  * stay co-located. Extraction is per-turn pure, so splitting a
-  * conversation across a salt boundary is safe; all *ordering-sensitive*
-  * derivation happens inside a single turn (SURVEY.md §7.5 risk 3). AQE
-  * skew handling covers joins but NOT mapPartitions skew — hence manual
-  * salting (SURVEY.md §4.2). The per-conv count pre-aggregation only reads
-  * the `conv_id` column (column pruning keeps the extra scan cheap at
-  * scale).
+  * Salting: `salt = floor(turn_idx / T)` with T = [[DefaultLongConvThreshold]],
+  * computed from the row alone. A conversation shorter than T turns keeps
+  * salt 0 and stays co-located; a longer one (the Zipf tail) is cut into
+  * blocks of T consecutive turn indices, one salt per block. Since
+  * (conv_id, turn_idx) is unique, no (conv_id, salt) key ever holds more
+  * than T turns, whatever the conversation length or the gaps in its
+  * turn_idx. Extraction is per-turn pure, so splitting a conversation
+  * across a salt boundary is safe; all *ordering-sensitive* derivation
+  * happens inside a single turn (SURVEY.md §7.5 risk 3). AQE skew handling
+  * covers joins but NOT mapPartitions skew — hence manual salting
+  * (SURVEY.md §4.2).
   *
   * Per-partition lineage (north rule): one LineageRow per input partition
   * (partition id, input snapshot, turn count, extraction-failure count,
@@ -32,62 +33,44 @@ object Pipeline {
   val DefaultSaltBuckets = 16
   val DefaultLongConvThreshold = 256L
 
+  /** The block salt: turn_idx blocks of [[DefaultLongConvThreshold]]. */
+  private def salt: Column = floor(col("turn_idx") / lit(DefaultLongConvThreshold))
+
   /** Salt + repartition + stable in-partition order. */
   def salted(
       spark: SparkSession,
       turns: Dataset[Turn],
-      saltBuckets: Int = DefaultSaltBuckets,
-      longConvThreshold: Long = DefaultLongConvThreshold,
       numPartitions: Option[Int] = None
   ): Dataset[Turn] = {
-    import spark.implicits._
-    val longConvs = turns
-      .groupBy($"conv_id").count()
-      .filter($"count" >= longConvThreshold)
-      .select($"conv_id".as("lc_conv_id"))
-    val salted = turns
-      .join(broadcast(longConvs), $"conv_id" === $"lc_conv_id", "left")
-      .withColumn(
-        "salt",
-        when($"lc_conv_id".isNotNull, pmod($"turn_idx", lit(saltBuckets))).otherwise(lit(0)))
+    val keys = Seq(col("conv_id"), salt)
     val repart = numPartitions match {
-      case Some(n) => salted.repartition(n, $"conv_id", $"salt")
-      case None    => salted.repartition($"conv_id", $"salt")
+      case Some(n) => turns.repartition(n, keys: _*)
+      case None    => turns.repartition(keys: _*)
     }
-    repart
-      .sortWithinPartitions($"conv_id", $"turn_idx")
-      .drop("lc_conv_id", "salt")
-      .as[Turn]
+    repart.sortWithinPartitions(col("conv_id"), col("turn_idx"))
   }
 
   /** Skew report: the conversation-length histogram [[salted]] acts on,
     * as a driver query — per conversation its turn count, byte weight,
     * whether it crosses the long-conversation threshold, and the number
-    * of salt buckets the salted repartition will actually spread it over
-    * (`|{turn_idx mod S}|`, 1 for short conversations). The top-k by turn
-    * count IS the skew: on a Zipf-shaped corpus these are the keys that
-    * would pin single tasks without salting.
+    * of (conv_id, salt) keys the salted repartition actually spreads it
+    * over (`|{floor(turn_idx / T)}|`). The top-k by turn count IS the
+    * skew: on a Zipf-shaped corpus these are the keys that would pin
+    * single tasks without salting.
     *
     * Scale shape: one map-side-combining agg on conv_id (count/sum plus a
-    * partial-distinct for the salt cardinality — never wider than S values
-    * per key); the top-k compiles to a TakeOrderedAndProject
+    * partial-distinct for the salt cardinality — one value per T-block of
+    * turn_idx); the top-k compiles to a TakeOrderedAndProject
     * (plan-asserted), so no global sort materializes.
     */
-  def skewReport(
-      turns: Dataset[Turn],
-      saltBuckets: Int = DefaultSaltBuckets,
-      longConvThreshold: Long = DefaultLongConvThreshold,
-      topK: Int = 50): org.apache.spark.sql.DataFrame =
+  def skewReport(turns: Dataset[Turn], topK: Int = 50): org.apache.spark.sql.DataFrame =
     turns.toDF()
       .groupBy(col("conv_id"))
       .agg(
         count(lit(1)).as("n_turns"),
         sum(length(col("text")).cast("long")).as("n_chars"),
-        countDistinct(pmod(col("turn_idx"), lit(saltBuckets))).as("n_salt_values"))
-      .withColumn("is_long", (col("n_turns") >= longConvThreshold).cast("int"))
-      .withColumn(
-        "n_salt_buckets",
-        when(col("is_long") === 1, col("n_salt_values")).otherwise(lit(1L)))
+        countDistinct(salt).as("n_salt_buckets"))
+      .withColumn("is_long", (col("n_turns") >= DefaultLongConvThreshold).cast("int"))
       .orderBy(col("n_turns").desc, col("conv_id").asc)
       .limit(topK)
       .select(col("conv_id"), col("n_turns"), col("n_chars"),
@@ -234,13 +217,8 @@ object Pipeline {
   }
 
   /** Full pipeline: salt → sort → extract. */
-  def run(
-      spark: SparkSession,
-      turns: Dataset[Turn],
-      saltBuckets: Int = DefaultSaltBuckets,
-      longConvThreshold: Long = DefaultLongConvThreshold
-  ): Dataset[ExtractedTurn] =
-    extractStage(spark, salted(spark, turns, saltBuckets, longConvThreshold))
+  def run(spark: SparkSession, turns: Dataset[Turn]): Dataset[ExtractedTurn] =
+    extractStage(spark, salted(spark, turns))
 
   /** Pipeline with lineage side-output. The returned thunk yields the
     * LineageRows observed by completed tasks — call it AFTER an action on
@@ -251,15 +229,11 @@ object Pipeline {
   def runWithLineage(
       spark: SparkSession,
       turns: Dataset[Turn],
-      inputSnapshot: String,
-      saltBuckets: Int = DefaultSaltBuckets,
-      longConvThreshold: Long = DefaultLongConvThreshold
+      inputSnapshot: String
   ): (Dataset[ExtractedTurn], () => Seq[LineageRow]) = {
     import spark.implicits._
-    val acc: CollectionAccumulator[LineageRow] =
-      spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$inputSnapshot")
-    val prepared = salted(spark, turns, saltBuckets, longConvThreshold)
-    val out = prepared.mapPartitions { it =>
+    val acc = spark.sparkContext.collectionAccumulator[LineageRow](s"lineage-$inputSnapshot")
+    val out = salted(spark, turns).mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       var turnCount = 0L
       var failureCount = 0L
@@ -271,21 +245,12 @@ object Pipeline {
         bytes += e.n_chars_in.toLong
         e
       }
-      new Iterator[ExtractedTurn] {
-        // emit the partition's lineage row exactly once, when the
-        // consumer observes exhaustion — this also covers EMPTY
-        // partitions (zero-count row), which a next()-side emission
-        // would miss ("one LineageRow per input partition" contract)
-        private var lineageEmitted = false
-        def hasNext: Boolean = {
-          val h = mapped.hasNext
-          if (!h && !lineageEmitted) {
-            acc.add(LineageRow(pid, inputSnapshot, turnCount, failureCount, bytes))
-            lineageEmitted = true
-          }
-          h
-        }
-        def next(): ExtractedTurn = mapped.next()
+      // the lazy tail runs once, when the consumer exhausts `mapped` —
+      // so EMPTY partitions also emit their (zero-count) row, the "one
+      // LineageRow per input partition" contract
+      mapped ++ {
+        acc.add(LineageRow(pid, inputSnapshot, turnCount, failureCount, bytes))
+        Iterator.empty
       }
     }
     val lineage = () => {

@@ -74,6 +74,14 @@ final class SnapshotStore(root: String, nBuckets: Int) {
       else existingBatchIds()
     }
 
+  /** Whether the data dir holds any bucket=* partition yet. */
+  private def holdsData(): Boolean = {
+    val dir = Paths.get(dataDir)
+    Files.isDirectory(dir) && scala.util.Using.resource(Files.list(dir)) { st =>
+      st.iterator().asScala.exists(_.getFileName.toString.startsWith("bucket="))
+    }
+  }
+
   /** Lineage batch_id=* partitions currently on disk. */
   private def existingBatchIds(): Set[Int] = {
     val dir = Paths.get(lineageDir)
@@ -207,8 +215,12 @@ final class SnapshotStore(root: String, nBuckets: Int) {
         .parquet(dataDir)
       // persist the schema AS STORED (footer-only read): parquet read-back
       // normalizes nested nullability, so the written plan's schema would
-      // not round-trip for a reader
-      val ddl = spark.read.parquet(dataDir).schema.toDDL
+      // not round-trip for a reader. Until a batch has committed rows the
+      // data dir holds no bucket partition to infer it from, so the
+      // manifest keeps its previous (empty) schema
+      val ddl =
+        if (holdsData()) spark.read.parquet(dataDir).schema.toDDL
+        else schemaDdl().getOrElse("")
       // lineage is keyed by batch and written with dynamic partition
       // overwrite (same idempotency model as the data): a crash between
       // this write and the manifest update re-runs the batch, which

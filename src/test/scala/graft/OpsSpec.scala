@@ -1307,9 +1307,7 @@ class OpsSpec extends AnyFunSuite {
         val nTurns = ts.size.toLong
         val nChars = ts.map(_.text.length.toLong).sum
         val isLong = if (nTurns >= graft.pipeline.Pipeline.DefaultLongConvThreshold) 1 else 0
-        val nSalts =
-          if (isLong == 1) ts.map(_.turn_idx % graft.pipeline.Pipeline.DefaultSaltBuckets).distinct.size.toLong
-          else 1L
+        val nSalts = ts.map(_.turn_idx / graft.pipeline.Pipeline.DefaultLongConvThreshold).distinct.size.toLong
         (cid, nTurns, nChars, isLong, nSalts)
       }.toSeq.sortBy(r => (-r._2, r._1)).take(50)
     val got = graft.pipeline.Pipeline.skewReport(graft.synth.SynthDataset.turns(spark, nConvs.toLong))

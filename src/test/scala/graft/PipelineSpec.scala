@@ -3,6 +3,7 @@ package graft
 import graft.model.Turn
 import graft.pipeline.{Pipeline, SnapshotStore}
 import graft.synth.{Synth, SynthDataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -16,7 +17,7 @@ class PipelineSpec extends AnyFunSuite {
   test("distributed extraction matches local golden corpus exactly") {
     import spark.implicits._
     val turns = SynthDataset.turns(spark, NConvs)
-    val extracted = Pipeline.run(spark, turns, saltBuckets = 4, longConvThreshold = 64)
+    val extracted = Pipeline.run(spark, turns)
       .select($"conv_id", $"turn_idx", $"extracted_text", $"failure")
       .as[(String, Int, String, Option[String])]
       .collect()
@@ -35,17 +36,41 @@ class PipelineSpec extends AnyFunSuite {
   test("salting splits long conversations without loss or duplication") {
     import spark.implicits._
     val turns = SynthDataset.turns(spark, NConvs)
-    val salted = Pipeline.salted(spark, turns, saltBuckets = 4, longConvThreshold = 64, numPartitions = Some(8))
-    // partition of the data: same multiset of (conv_id, turn_idx)
-    val before = turns.select($"conv_id", $"turn_idx").as[(String, Int)].collect().sorted.toSeq
-    val after = salted.select($"conv_id", $"turn_idx").as[(String, Int)].collect().sorted.toSeq
-    assert(before == after)
-    // a long conversation actually spans >1 partition
-    val longConv = f"conv-${0}%06d" // conv 0 has 400+ turns (Synth.convLen)
-    val partsOfLong = salted
-      .mapPartitions(it => Iterator.single(it.count(_.conv_id == longConv)))
-      .collect().count(_ > 0)
-    assert(partsOfLong > 1, s"long conv not split: present in $partsOfLong partitions")
+    def check(turns: Dataset[Turn], longConv: String): Unit = {
+      val salted = Pipeline.salted(spark, turns, numPartitions = Some(8))
+      // partition of the data: same multiset of (conv_id, turn_idx)
+      val before = turns.select($"conv_id", $"turn_idx").as[(String, Int)].collect().sorted.toSeq
+      val after = salted.select($"conv_id", $"turn_idx").as[(String, Int)].collect().sorted.toSeq
+      assert(before == after)
+      // the long conversation actually spans >1 partition
+      val partsOfLong = salted
+        .mapPartitions(it => Iterator.single(it.count(_.conv_id == longConv)))
+        .collect().count(_ > 0)
+      assert(partsOfLong > 1, s"$longConv not split: present in $partsOfLong partitions")
+    }
+    check(SynthDataset.turns(spark, NConvs), f"conv-${0}%06d") // conv 0 has 400+ turns (Synth.convLen)
+    // one conversation of 8·T turns with gaps in turn_idx (every third index)
+    val t = Pipeline.DefaultLongConvThreshold.toInt
+    val ts = new java.sql.Timestamp(0L)
+    check((0 until 8 * t).map(i => Turn("conv-sparse", 3 * i, "user", s"turn $i", null, ts)).toDS(),
+      "conv-sparse")
+  }
+
+  test("lineage: one row per partition, empty partitions included, counts complete") {
+    import spark.implicits._
+    // own session (shared SparkContext): AQE off, so the 8 shuffle
+    // partitions stay uncoalesced and 2 short conversations leave most empty
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    val short = SynthDataset.turns(spark, 3L).filter($"conv_id" =!= "conv-000000")
+    val turns = s.createDataset(short.collect().toSeq)
+    val (out, lineage) = Pipeline.runWithLineage(s, turns, "snap-empty")
+    assert(out.count() == turns.count())
+    val rows = lineage()
+    val perPartition = Pipeline.salted(s, turns).rdd
+      .mapPartitionsWithIndex((i, it) => Iterator.single(i -> it.size.toLong)).collect().toSeq
+    assert(perPartition.size == 8 && perPartition.exists(_._2 == 0), perPartition)
+    assert(rows.map(r => r.partition_id -> r.turn_count) == perPartition)
   }
 
   test("lineage rows cover all turns and count failures correctly") {
@@ -98,6 +123,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(persisted.fields.map(f => (f.name, f.dataType)).toSeq ==
       onDisk.fields.map(f => (f.name, f.dataType)).toSeq,
       s"persisted DDL != on-disk schema:\n$ddl\nvs\n${onDisk.toDDL}")
+    turns.unpersist()
+  }
+
+  test("snapshot: a first batch with no rows commits, later batches infer the schema") {
+    import spark.implicits._
+    // every conv_id hashes into buckets 4-7 of 8: batch 1 (buckets 0-3) is empty
+    val turns = SynthDataset.turns(spark, 60L)
+      .filter(pmod(xxhash64($"conv_id"), lit(8L)) >= 4).as[Turn].cache()
+    val fullDir = Files.createTempDirectory("graft-full").toString
+    val batchedDir = Files.createTempDirectory("graft-batched").toString
+    new SnapshotStore(fullDir, nBuckets = 8).process(spark, turns, "snap-1", bucketsPerBatch = 8)
+    val store = new SnapshotStore(batchedDir, nBuckets = 8)
+    assert(store.process(spark, turns, "snap-1", bucketsPerBatch = 4) == 2)
+    assert(store.completedBuckets() == (0 until 8).toSet)
+    assert(store.schemaDdl().isDefined)
+    def canon(dir: String) = new SnapshotStore(dir, 8).readExtracted(spark)
+      .select($"conv_id", $"turn_idx", $"extracted_text", $"failure")
+      .as[(String, Int, String, Option[String])].collect().sorted.toSeq
+    val got = canon(batchedDir)
+    assert(got.size == turns.count())
+    assert(got == canon(fullDir))
     turns.unpersist()
   }
 

@@ -203,21 +203,20 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("gram"), s"gram key missing from the join:\n$p")
   }
 
-  test("extraction pipeline: one data shuffle; pre-agg scan prunes to conv_id") {
+  test("extraction pipeline: one data shuffle, one scan, no broadcast or join") {
     import spark.implicits._
-    // parquet-backed input so scan pruning is observable
+    // parquet-backed input so the scans are countable
     val tmp = Files.createTempDirectory("graft-plan").toString + "/turns"
     graft.synth.SynthDataset.turns(spark, 20L).write.parquet(tmp)
     val turns = spark.read.parquet(tmp).as[Turn]
     val p = plan(Pipeline.run(spark, turns).toDF())
-    // the long-conv pre-aggregation must scan only conv_id
-    assert(p.contains("ReadSchema: struct<conv_id:string>"),
-      s"pre-agg scan reads more than conv_id:\n$p")
-    // exactly one full-data exchange: the salted repartition. (The tiny
-    // pre-agg side has its own partial/final agg exchange + broadcast.)
-    val exchanges = "(?<!Broadcast)Exchange hashpartitioning".r.findAllIn(p).size
-    assert(exchanges <= 2, s"unexpected extra shuffles ($exchanges):\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"long-conv join should broadcast:\n$p")
+    // the block salt is row-local: the salted repartition is the only
+    // exchange, with no pre-aggregation side to scan, broadcast or join
+    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
+    assert(exchanges == 1, s"expected exactly the salted repartition ($exchanges):\n$p")
+    assert(!p.contains("BroadcastExchange"), s"unexpected broadcast:\n$p")
+    assert(!p.contains("Join"), s"unexpected join:\n$p")
+    assert("FileScan parquet".r.findAllIn(p).size == 1, s"input must be scanned once:\n$p")
   }
 
   test("repetition stats and PII redaction are scan->project: zero shuffles") {
@@ -858,11 +857,10 @@ class PlanShapeSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.posexplode(
           org.apache.spark.sql.functions.col("spans"))))
     assert(p.contains("Generate"), s"span explode must compile to Generate:\n$p")
-    // the pipeline itself costs 2 (salted repartition + tiny long-conv
-    // pre-agg, same budget as the baseline pipeline assert); posexplode
-    // must ride above them without adding a third
-    val exchanges = "(?<!Broadcast)Exchange hashpartitioning".r.findAllIn(p).size
-    assert(exchanges <= 2, s"posexplode must not add a shuffle ($exchanges):\n$p")
+    // the pipeline itself costs exactly the salted repartition; posexplode
+    // must ride above it without adding a second
+    val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
+    assert(exchanges == 1, s"posexplode must not add a shuffle ($exchanges):\n$p")
   }
 
   test("conv fingerprint dups: two sha-only exchanges, map-side partials, no join") {

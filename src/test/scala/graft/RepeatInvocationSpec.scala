@@ -18,6 +18,7 @@ class RepeatInvocationSpec extends AnyFunSuite {
       .collect().map(_.toString).toSet
 
   for (q <- Seq(
+      "q47_rule_registry", "q90_stream_extract", "q106_stream_windows",
       "q180_stream_drop_audit", "q185_ivf_index_scan",
       "q191_ivf_quantized_index", "q194_time_travel",
       "q196_snapshot_changelog")) {
